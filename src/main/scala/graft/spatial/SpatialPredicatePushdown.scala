@@ -37,6 +37,15 @@ import graft.functions.{GeoCodec, StCovers, StIntersects}
   * (`api/.../expressions/Expression.java:65-98` throws on `negate()`), and a
   * bbox test is only a *necessary* condition, so `NOT ST_Intersects` must
   * never produce pruning.
+  *
+  * Pruning sees literals, codegen sees parameters: the derived bounds are
+  * plain `Literal`s all through optimization, so [[GraftFileIndex]], the
+  * DSv2 scan's pushed filters and parquet `PushedFilters` prune with real
+  * constants. Only after the scan is planned does
+  * [[graft.plans.ParameterizeScanFilters]] (installed by
+  * [[Geo.installRule]]) turn the constants of the `FilterExec` above it
+  * into [[graft.plans.ParamLiteral]]s, so lookups that differ only in
+  * their window share one compiled whole-stage class.
   */
 object SpatialPredicatePushdown extends Rule[LogicalPlan] {
 
@@ -481,6 +490,10 @@ object Geo {
     val missing = rules.filterNot(cur.contains)
     if (missing.nonEmpty) {
       spark.experimental.extraOptimizations = cur ++ missing
+    }
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(graft.plans.ParameterizeScanFilters)) {
+      spark.experimental.extraStrategies = strategies :+ graft.plans.ParameterizeScanFilters
     }
   }
   def install(spark: SparkSession): Unit = {

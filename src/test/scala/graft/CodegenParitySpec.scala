@@ -231,4 +231,81 @@ class CodegenParitySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("graft.plans.ParamLiteral (outside the discovered package): generated and " +
+      "interpreted projections agree with each other and with Literal") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import graft.plans.ParamLiteral
+    val cases: Seq[(DataType, Seq[Any])] = Seq(
+      ByteType -> Seq(Byte.MinValue, 0.toByte, 7.toByte),
+      ShortType -> Seq(Short.MaxValue, -3.toShort),
+      IntegerType -> Seq(Int.MinValue, 0, 42),
+      LongType -> Seq(Long.MaxValue, -1L),
+      FloatType -> Seq(Float.NaN, -0.0f, 1.5f),
+      DoubleType -> Seq(Double.NaN, -0.0, 12.5, Double.NegativeInfinity),
+      DateType -> Seq(0, 19000),
+      TimestampType -> Seq(0L, 1700000000000000L),
+      TimestampNTZType -> Seq(-5L, 86400000000L))
+    cases.foreach { case (dt, values) =>
+      val col = BoundReference(0, dt, nullable = true)
+      def exprs(c: Any => Expression): Seq[Expression] = values.flatMap { v =>
+        Seq(c(v), EqualTo(col, c(v)), LessThanOrEqual(col, c(v)), GreaterThan(c(v), col))
+      }
+      val param = exprs(ParamLiteral(_, dt))
+      val literal = exprs(Literal(_, dt))
+      val generated = GenerateUnsafeProjection.generate(param)
+      val interp = InterpretedUnsafeProjection.createProjection(param)
+      val oracle = InterpretedUnsafeProjection.createProjection(literal)
+      (values :+ null).foreach { in =>
+        val row = InternalRow(in)
+        val want = oracle(row).copy()
+        assert(generated(row).copy() == want, s"$dt $in: generated ParamLiteral diverged from Literal")
+        assert(interp(row).copy() == want, s"$dt $in: interpreted ParamLiteral diverged from Literal")
+      }
+    }
+  }
+
+  test("a parameterized graft lookup answers the same with whole-stage codegen off " +
+      "and with the codegen factory disabled") {
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.functions._
+    import graft.functions.GeoSql._
+    installAll()
+    val dir = java.nio.file.Files.createTempDirectory("graft_param_parity").toString
+    val src = spark.range(0, 600, 1, 2).toDF("id")
+      .withColumn("attr", (col("id") * 37 % 100).cast("int"))
+      .withColumn("geom", st_point((col("id") % 60).cast("double") - 30.0,
+        (col("id") / 60).cast("double") - 5.0))
+    graft.spatial.GeoTable.write(src, dir, "geom", res = 8, numFiles = 4)
+    def lookups = Seq(
+      graft.spatial.GeoTable.read(spark, dir),
+      spark.read.format("graft").load(dir)).map { t =>
+      t.filter(st_intersects(col("geom"), st_makeenvelope(lit(-12.5), lit(-2.0), lit(6.25), lit(3.5))))
+        .filter(col("attr") < 61)
+    }
+    val codegen = lookups.map(multiset)
+    assert(codegen.forall(_.nonEmpty) && codegen.distinct.size == 1)
+    def parameterized(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.collect { case f: FilterExec => f }
+        .exists(_.condition.exists(_.isInstanceOf[graft.plans.ParamLiteral]))
+    val saved = spark.conf.getOption("spark.sql.codegen.wholeStage")
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      lookups.zip(codegen).foreach { case (df, want) =>
+        assert(multiset(df) == want, "whole-stage codegen off: the lookup diverged")
+        assert(parameterized(df), "whole-stage codegen off: the scan filter is not parameterized")
+      }
+    } finally saved match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
+      case None => spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+    interpreted {
+      lookups.zip(codegen).foreach { case (df, want) =>
+        assert(multiset(df) == want, "codegen factory disabled: the lookup diverged")
+      }
+    }
+  }
 }
